@@ -287,9 +287,11 @@ def enrich_misses(
         # (the memoized-cache contract), and AQE cannot coalesce a
         # cached plan's partitioning — without a quota-sized
         # n_partitions the dropDuplicates exchange would otherwise run
-        # at adaptive initialPartitionNum Python tasks per (micro-)batch
-        # for a miss set of a few rows. coalesce is narrow (no second
-        # shuffle) and per-row enrichment is partitioning-independent.
+        # the session's full shuffle width (tune() sets it to the core
+        # count; a caller may set more) in Python tasks per
+        # (micro-)batch for a miss set of a few rows. coalesce is narrow
+        # (no second shuffle) and per-row enrichment is
+        # partitioning-independent.
         src = src.coalesce(src.sparkSession.sparkContext.defaultParallelism)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -928,33 +928,6 @@ def _lloyd_driver_matrix(
     return [(cid, [float(x) for x in vec]) for cid, vec in cents]
 
 
-def _assign_cells(emb: DataFrame, cent: DataFrame) -> DataFrame:
-    """(id, c_id): nearest centroid by squared L2, ties to lower c_id.
-
-    The centroid table is cells × dim — driver-sized at any corpus
-    scale, so it ships to executors as DATA in _with_cells' one-row
-    broadcast crossJoin. Assignment is then a pure map stage: per row,
-    ``array_min`` over ``struct(d2, c_id)`` picks the lexicographic
-    minimum — exactly argmin-with-lower-id-ties — with ZERO shuffle.
-    The previous form (crossJoin + row_number window) shuffled
-    |rows| × |cells| rows per Lloyd round just to discard all but one;
-    at 50k vectors × 4 assignments that exchange dominated q130's
-    runtime.
-
-    The per-element fold (sequential (x-y)² accumulation in double)
-    is unchanged, so assignments — and therefore every downstream
-    value-checked result — are bit-identical to the join form.
-    """
-    rows = sorted(
-        (r["c_id"], [float(x) for x in r["c_vec"]]) for r in cent.collect()
-    )
-    if not rows:  # empty corpus -> no cells, no assignments
-        return emb.select(
-            "id", F.lit(None).cast("long").alias("c_id")
-        ).where(F.lit(False))
-    return _with_cells(emb, rows).select("id", "c_id")
-
-
 #: cell count above which assignment switches to the Arrow kernel —
 #: the HOF fold's interpreter cost is rows × cells × dim, fine at the
 #: oracle-pinned 8 cells but 2.8M interpreted 64-element folds for

@@ -4,6 +4,10 @@ The driver harness owns the session it passes to ``__spark_entry__``;
 ``tune`` therefore only sets *runtime-settable* confs so our queries
 behave deterministically (UTC timestamps, non-ANSI coercions, AQE)
 regardless of who built the session.
+
+Shuffle sizing comes from the session alone (its core count), never
+from the caller's environment; ``get_session`` reads only deployment
+settings (core count, driver memory) and otherwise sizes to the host.
 """
 
 from __future__ import annotations
@@ -25,9 +29,6 @@ _RUNTIME_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # initialPartitionNum is set ADAPTIVELY below (_initial_partitions):
-    # it must scale with input bytes, not sit at a constant tuned for
-    # either regime.
     # Arrow for every pandas boundary (toPandas, pandas UDFs).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # The testdata's events.parquet stores TIMESTAMP(NANOS); Spark's reader
@@ -37,114 +38,47 @@ _RUNTIME_CONFS = {
 }
 
 
-#: Bytes of scan input per initial shuffle partition. Calibrated on two
-#: measured anchors: the round-5 sf10 A/B (1.8 GB star; 256 initial
-#: partitions took the exploded shingle/band plans from 393->201 s /
-#: 347->145 s), and the round-10 sf0.1 interleaved A/B (17.5 MB inputs;
-#: a constant 256 cost ~10% over the core count on an 8-query subset —
-#: every tiny stage still wrote 256-bucket shuffle maps before AQE
-#: coalesced the read side). 8 MiB/partition reproduces both: sf0.1 ->
-#: 32 (the core-count floor), sf10 -> ~230. Override via
-#: spark.ipes.initialPartitionsPerBytes; floor = default parallelism,
-#: cap = 1024 (shuffle-block quadratics, guide §2.2).
-INITIAL_PARTITIONS_PER_BYTES_CONF = "spark.ipes.initialPartitionsPerBytes"
-_INITIAL_PARTITIONS_PER_BYTES = 8 << 20
-
-
-#: cache of the dataset-directory size walk — tune() runs inside every
-#: registered query, and re-walking an unchanged directory per call is
-#: wasted driver time (ADVICE r10).
-_DIR_BYTES_CACHE: dict[str, int] = {}
-
-
-def _dir_bytes(sf_dir: str) -> int:
-    total = _DIR_BYTES_CACHE.get(sf_dir)
-    if total is None:
-        total = 0
-        for root, _dirs, files in os.walk(sf_dir):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:  # pragma: no cover
-                    pass
-        _DIR_BYTES_CACHE[sf_dir] = total
-    return total
-
-
-def _initial_partitions(cpus: int, per_bytes: int) -> int:
-    """Derive AQE's initialPartitionNum from the benched dataset size
-    ($SPARK_GRAFT_SF_DIR). Without the env (cluster / test sessions)
-    fall back to 256 — the measured sf10 value, and AQE coalescing
-    makes over-provisioning cheap relative to under-provisioning.
-
-    Round-11 bisect note: the r10 q43/q121p regression was NOT this
-    derivation — scripts/ab_initial_partitions.py measured 32 vs 256
-    a wash (±5%) at sf0.1 on the simhash/minhash families; the cause
-    was the simhash mask re-evaluation (functions/text.py)."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
-    if not sf_dir or not os.path.isdir(sf_dir):
-        return 256
-    return max(cpus, min(1024, _dir_bytes(sf_dir) // per_bytes))
-
-
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to a session we did not necessarily create."""
+    """Apply runtime confs to a session we did not necessarily create.
+
+    Shuffle width starts at the session's core count. Input-size-derived
+    initial partition counts in [32, 1024] measured a wash (±5%) at sf0.1
+    and sf10 (OPTIMIZATION_r11.md), while a wide start costs every stage
+    under a persisted frame its full width (AQE cannot coalesce a cached
+    plan). initialPartitionNum is set explicitly because, left unset, it
+    reads back as None rather than the width AQE starts from.
+    """
     for k, v in _RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - conf may be static in some builds
-            pass
-    try:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    except ValueError:  # pragma: no cover - malformed harness env
-        cpus = 32
-    # A bad user value (0, negative, non-integer) must not silently skip
-    # the adaptive tuning (ADVICE r10): fall back to the default rate.
-    try:
-        per = int(
-            spark.conf.get(
-                INITIAL_PARTITIONS_PER_BYTES_CONF,
-                str(_INITIAL_PARTITIONS_PER_BYTES),
-            )
-        )
-    except ValueError:
-        per = _INITIAL_PARTITIONS_PER_BYTES
-    if per <= 0:
-        per = _INITIAL_PARTITIONS_PER_BYTES
-    try:
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(_initial_partitions(cpus, per)),
-        )
-    except Exception:  # pragma: no cover - conf may be static in some builds
-        pass
-    # Local mode: shuffle partitions ~ cores. On a real cluster AQE
-    # coalescing makes a higher initial number safe; 32 matches the
-    # local[32] test substrate and is a fine AQE starting point.
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32")
-        )
-    except Exception:  # pragma: no cover
-        pass
+        spark.conf.set(k, v)
+    cores = str(spark.sparkContext.defaultParallelism)
+    spark.conf.set("spark.sql.shuffle.partitions", cores)
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", cores)
     return spark
 
 
-def get_session(app_name: str = "ipes_data_pipeline_spark") -> SparkSession:
-    """Build (or reuse) a local session with scale-aware defaults.
+def _default_driver_memory() -> str:
+    """About 3/4 of the host's physical memory, in whole MiB."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{phys * 3 // 4 >> 20}m"
 
+
+def get_session(app_name: str = "ipes_data_pipeline_spark") -> SparkSession:
+    """Build (or reuse) a local session sized to the host.
+
+    ``$SPARK_GRAFT_CPUS`` and ``$SPARK_DRIVER_MEMORY`` override the core
+    count (default: every core) and driver heap (default: ~3/4 of RAM).
     On a real cluster the same confs apply; only master/memory change.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", cpus)
+        .getOrCreate()
     )
-    for k, v in _RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return tune(spark)
