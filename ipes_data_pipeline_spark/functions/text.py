@@ -132,7 +132,7 @@ def simhash_bits_from_masks(
     """SimHash signature from STAGED per-token masks (see
     :func:`simhash_masks`) plus the token count: per bit-dimension d the
     ±1 sum over n tokens with c high bits is 2c - n, so bit = 1 iff
-    2c >= n (n = 0 gives '1', matching the legacy sum-of-empty = 0 >= 0).
+    2c >= n (n = 0 gives '1': the empty sum 0 is >= 0).
     Each fold is one long shift-and-mask per element — the cheapest
     per-element op the HOF interpreter can run."""
 
@@ -149,42 +149,6 @@ def simhash_bits_from_masks(
         c = F.aggregate(mask_col, F.lit(0).cast("long"), fold_fn(d))
         bits.append(F.when(c * 2 >= n_tokens, F.lit("1")).otherwise(F.lit("0")))
     return F.concat(*bits)
-
-
-def simhash_bits_from_hashes(hash_col: Column, n_bits: int = 32) -> Column:
-    """SimHash bits over a pre-hashed token array (see
-    :func:`token_hashes`): per bit-dimension d, sum ±1 according to the
-    d-th hex digit's high bit; bit = 1 iff sum >= 0.
-
-    Returns the signature as an ``n_bits``-char '0'/'1' string (printable,
-    engine-portable; hamming distance = count of differing chars).
-
-    Single-expression convenience form. The engine's hot path
-    (:func:`~ipes_data_pipeline_spark.operators.dedup_minhash.simhash_signatures`)
-    instead stages :func:`simhash_masks` in its own projection and folds
-    with :func:`simhash_bits_from_masks` — inlined here, the mask
-    transform is re-evaluated by every per-bit fold (no CSE across
-    expressions), which measured 3.6x slower at sf0.1 (round 11).
-    n_bits > 32 (beyond md5's digits) keeps the legacy substring path,
-    where out-of-range digits contribute -1.
-    """
-    if n_bits > 32:  # pragma: no cover - legacy edge, no md5 digits left
-
-        def contrib_fn(d: int):
-            return lambda h: F.when(
-                F.substring(h, d + 1, 1) >= "8", F.lit(1)
-            ).otherwise(F.lit(-1))
-
-        bits = []
-        for d in range(n_bits):
-            contrib = F.transform(hash_col, contrib_fn(d))
-            total = F.aggregate(contrib, F.lit(0), lambda acc, x: acc + x)
-            bits.append(F.when(total >= 0, F.lit("1")).otherwise(F.lit("0")))
-        return F.concat(*bits)
-
-    return simhash_bits_from_masks(
-        simhash_masks(hash_col, n_bits), F.size(hash_col), n_bits
-    )
 
 
 def normalized_text(col) -> Column:

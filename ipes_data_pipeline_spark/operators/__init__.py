@@ -44,10 +44,8 @@ from ipes_data_pipeline_spark.operators.sessionize import (  # noqa: F401
 from ipes_data_pipeline_spark.operators.similarity import (  # noqa: F401
     ann_topk_bruteforce,
     ann_topk_ivf,
-    ann_topk_ivf_kmeans,
     ann_topk_ivf_kmeans_lloyd,
     cosine_topk_pairs_lsh,
-    kmeans_lloyd_centroids,
     knn_graph,
     knn_graph_bucketed,
     semdedup,

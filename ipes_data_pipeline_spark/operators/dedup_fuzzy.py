@@ -26,12 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ipes_data_pipeline_spark.operators.util import (
-    _EDGE_SPILL_MIN_INPUT_BYTES,
-    EDGE_SPILL_MIN_INPUT_BYTES_CONF,
-    cut,
-    spill_worthwhile,
-)
+from ipes_data_pipeline_spark.operators import regime
+from ipes_data_pipeline_spark.operators.util import cut
 
 
 def candidate_pairs(
@@ -41,7 +37,6 @@ def candidate_pairs(
     block_expr: Column,
     max_edits: int = 2,
     block_cap: int | None = None,
-    spill_edges: bool = True,
 ) -> DataFrame:
     """Blocked levenshtein candidate edges (src, dst), both directions.
 
@@ -59,18 +54,10 @@ def candidate_pairs(
     value-checked by the q39p oracle IN the regime where it fires.
     ``None`` ⇒ lossless blocking, unchanged behavior.
 
-    ``spill_edges`` (default on) allows the half edge set to
-    materialize via a columnar parquet spill instead of
-    ``localCheckpoint`` — the edge set is the one intermediate
-    PAIR-PROPORTIONAL here, and the round-9 A/B
-    (``scripts/ab_q39_edge_store.py``) measured the deserialized row
-    blocks of localCheckpoint at +182 s on the 213M-edge sf10 set
-    (48 GB heap thrash) vs +26 s for the spill. The regime is
-    input-size-adaptive (``spark.ipes.edgeSpillMinInputBytes``,
-    default 8 MiB — the edge blowup means the flip must come well
-    before the input itself is big): below it the spill's extra write
-    job is pure overhead (~0.4 s/query measured at sf0.1) and
-    localCheckpoint is used. Off ⇒ always the block-store regime.
+    The half edge set — the one PAIR-PROPORTIONAL intermediate here —
+    materializes via the columnar parquet spill once the input reaches
+    the ``edge_spill`` cap, else via ``localCheckpoint`` (see
+    :mod:`.regime`).
     """
     keyed = df.select(
         F.col(id_col).alias("node"),
@@ -80,9 +67,7 @@ def candidate_pairs(
     # Store-regime decision on the PRE-SALT projection (file-size-based
     # estimate for scan-rooted plans; the salted join below would
     # inflate the estimate with join-output guesses).
-    spill = spill_edges and spill_worthwhile(
-        keyed, EDGE_SPILL_MIN_INPUT_BYTES_CONF, _EDGE_SPILL_MIN_INPUT_BYTES
-    )
+    spill = not regime.small("edge_spill", regime.estimate(keyed))
     if block_cap is not None:
         # Sizes via a map-side-combined groupBy broadcast back — a
         # window over blk would itself serialize on the skewed block
@@ -212,8 +197,6 @@ def min_label_components_contracted(
     nodes: DataFrame,
     edges: DataFrame,
     max_rounds: int = 16,
-    broadcast_labels_max_bytes: int = 1 << 30,
-    driver_components_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """Connected components by one propagation round + graph contraction.
 
@@ -225,10 +208,10 @@ def min_label_components_contracted(
        map-side partial dedup collapses the result before the shuffle.
     3. Components of the contracted graph — rows = surviving label
        pairs, orders of magnitude smaller than the node set for dense
-       similarity graphs. Up to ``driver_components_max_rows`` rows the
+       similarity graphs. Under the ``driver_components`` cap the
        components are solved by an exact union-find on the driver (one
        Arrow collect of the materialized edge set — the broadcast
-       small-side premise); beyond the cap, distributed min-label
+       small-side premise); beyond it, distributed min-label
        propagation to fixpoint.
     4. Map back: node → l1 → contracted canonical.
 
@@ -239,24 +222,15 @@ def min_label_components_contracted(
     inspired by the alternating-star contraction family of
     connected-components algorithms.
 
-    The relabel joins BROADCAST l1 whenever its measured row count fits
-    ``broadcast_labels_max_bytes`` (default 1 GiB at ~32 B/row — half
-    the knn broadcast-regime precedent, ``similarity.knn_graph``'s
-    2 GiB ``max_corpus_bytes``, and covers ~33M-node graphs; beyond
-    the cap the joins fall back to plain shuffle joins, which stay
-    linear). This is
-    load-bearing, not a hint for AQE to rediscover: l1 is one row per
-    NODE, so between sf1 and sf10 it crosses the 10 MB adaptive
-    broadcast threshold and both relabel joins silently flip BHJ→SMJ —
-    shuffling AND sorting the full doubled edge set twice. The round-10
-    A/B (``scripts/ab_q39_contraction.py``, fresh process per variant,
-    prebuilt cap=256 edges at sf10) measured the flip at 132.5 s
-    (shipped SMJ + localCheckpoint replan) / 72.9 s (SMJ, no store) vs
-    **3.75 s with the forced broadcast** — the 53×-per-decade
-    contraction growth the round-9 verdict flagged was exactly this
-    threshold crossing, not compute. Counting the already-materialized
-    l1 to size the decision costs one cheap action on checkpointed
-    blocks.
+    The relabel joins BROADCAST l1 whenever its measured row count
+    fits the ``label_broadcast`` cap (:mod:`.regime`); beyond it they
+    are plain shuffle joins, which stay linear. This is load-bearing,
+    not a hint for AQE to rediscover: l1 is one row per NODE, so
+    between sf1 and sf10 it crosses the 10 MB adaptive broadcast
+    threshold and both relabel joins would silently flip BHJ→SMJ —
+    shuffling AND sorting the full doubled edge set twice. Counting
+    the already-materialized l1 to size the decision costs one cheap
+    action on checkpointed blocks.
     """
     # half edges are checkpointed by candidate_pairs; the doubled union
     # is narrow over that, so no re-materialization here
@@ -268,10 +242,10 @@ def min_label_components_contracted(
         .agg(F.min("dst").alias("lab"))
         .transform(cut)
     )
-    # ~32 B/row (two int64s + hashed-relation overhead) against the cap
     lsrc = l1.withColumnRenamed("node", "src").withColumnRenamed("lab", "src_lab")
     ldst = l1.withColumnRenamed("node", "dst").withColumnRenamed("lab", "dst_lab")
-    if l1.count() * 32 <= broadcast_labels_max_bytes:
+    # ~32 B/row: two int64s + hashed-relation overhead
+    if regime.small("label_broadcast", l1.count() * 32):
         lsrc, ldst = F.broadcast(lsrc), F.broadcast(ldst)
     contracted = (
         e_self.join(lsrc, "src")
@@ -289,18 +263,17 @@ def min_label_components_contracted(
     n_contracted = contracted.count()
     if n_contracted == 0:
         return l1.select("node", F.col("lab").alias("canonical_id"))
-    if n_contracted <= driver_components_max_rows:
+    # 16 B/row: two int64 labels
+    if regime.small("driver_components", n_contracted * 16):
         # Driver union-find regime: the contracted graph is orders of
         # magnitude smaller than the node set (one row per SURVIVING
-        # inter-component label pair — 1.3k rows for 4.3M raw edges at
-        # sf0.1), so its exact components are a bounded driver problem,
-        # the same small-side-fits premise as Spark's own broadcast
-        # collect. One Arrow transfer replaces the whole distributed
-        # fixpoint chain (label-distinct shuffle + per-round
+        # inter-component label pair), so its exact components are a
+        # bounded driver problem. One Arrow transfer replaces the whole
+        # distributed fixpoint chain (label-distinct shuffle + per-round
         # join/groupBy/cut + convergence-probe actions — 4+ jobs even
         # at diameter 1). Union-by-min-root IS the fixpoint's answer:
         # every union keeps the smaller root, so each root is the
-        # minimum label of its component. Beyond the row cap the
+        # minimum label of its component. Beyond the cap the
         # distributed loop below stays the scale path (the 100 TB
         # regime), with broadcast-capped relabel joins.
         pdf = contracted.toPandas()
@@ -355,8 +328,6 @@ def dedupe_fuzzy(
     checkpoint: bool = False,
     until_converged: bool = True,
     block_cap: int | None = None,
-    spill_edges: bool = True,
-    broadcast_labels_max_bytes: int = 1 << 30,
 ) -> DataFrame:
     """Full blocked fuzzy dedup: returns ``(<id_col>, canonical_id)``.
 
@@ -381,16 +352,11 @@ def dedupe_fuzzy(
         else F.element_at(F.split(F.col(name_col), r"\s+"), 1)
     )
     nodes = df.select(F.col(id_col).alias("node"))
-    edges = candidate_pairs(
-        df, id_col, name_col, block, max_edits, block_cap, spill_edges
-    )
+    edges = candidate_pairs(df, id_col, name_col, block, max_edits, block_cap)
     if until_converged:
         # contraction path: exact components, cheapest on dense graphs
         comp = min_label_components_contracted(
-            nodes,
-            edges,
-            max_rounds=iterations,
-            broadcast_labels_max_bytes=broadcast_labels_max_bytes,
+            nodes, edges, max_rounds=iterations
         )
     else:
         comp = min_label_components(nodes, edges, iterations, checkpoint=checkpoint)

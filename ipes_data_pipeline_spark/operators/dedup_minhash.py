@@ -25,13 +25,19 @@ from pyspark.sql import functions as F
 from ipes_data_pipeline_spark.functions.text import (
     distinct_tokens,
     shingles,
-    simhash_bits_from_hashes,
     simhash_bits_from_masks,
     simhash_masks,
     token_hashes,
     tokens,
 )
-from ipes_data_pipeline_spark.operators.util import cut, spill_worthwhile, spread
+from ipes_data_pipeline_spark.operators import regime
+from ipes_data_pipeline_spark.operators.util import cut, spread
+
+
+def _spill(df: DataFrame) -> bool:
+    """Store an intermediate proportional to ``df`` via the parquet
+    spill (the ``input_spill`` cap, :mod:`.regime`)."""
+    return not regime.small("input_spill", regime.estimate(df))
 
 
 def minhash_bands(
@@ -211,13 +217,9 @@ def minhash_lsh_pairs(
     # this checkpoint exists to avoid.
     # Band tables are data-proportional (n_docs × n_bands string-keyed
     # rows): store them via the columnar parquet spill ONCE THE INPUT IS
-    # BIG — the r9 q39 edge-store lesson (SCALING.md: +182 s heap
-    # thrash vs +26 s spill at 213M rows) — but the spill's extra write
-    # job costs ~0.4 s/query where localCheckpoint is free (round-10
-    # sf0.1 A/B), so the store regime follows the input-size estimate
-    # (util.spill_worthwhile; spark.ipes.spillMinInputBytes). No
-    # spark_partition_id consumer anywhere downstream.
-    spill = spill_worthwhile(df)
+    # BIG (the ``input_spill`` cap). No spark_partition_id consumer
+    # anywhere downstream.
+    spill = _spill(df)
     raw = minhash_bands(
         df, id_col, text_col, n_hashes, band_size, shingle_n, hash_fn, shingles_df
     )
@@ -279,14 +281,11 @@ def minhash_lsh_pairs_delta(
     the corpus gets sub-salted even when the new batch's share is small.
     """
     # corpus/batch-proportional band tables: parquet-spill store once
-    # the input is big (the r9 edge-store rule, input-adaptive — see
-    # minhash_lsh_pairs)
-    spill_new = spill_worthwhile(new_df)
+    # the input is big (see minhash_lsh_pairs)
+    spill_new = _spill(new_df)
     # corpus_df may be None when a stored corpus_bands is passed; size
     # the corpus side from whichever frame actually exists
-    spill_corpus = spill_worthwhile(
-        corpus_df if corpus_bands is None else corpus_bands
-    )
+    spill_corpus = _spill(corpus_df if corpus_bands is None else corpus_bands)
     new_bands = cut(
         minhash_bands(
             new_df, id_col, text_col, n_hashes, band_size, shingle_n, hash_fn
@@ -372,19 +371,17 @@ def minhash_neardup_pairs(
     # stage, and the naive form paid it twice (once under the bands'
     # checkpoint, once per refine side). Eager cut, via the columnar
     # parquet spill ONCE THE INPUT IS BIG: the per-doc shingle STRING
-    # ARRAYS are exactly the deserialized-row-block shape that thrashed
-    # the heap in the r9 q39 edge-store A/B (this frame was SCALING.md's
-    # remaining q42p suspect — "the sf10 shingle-array cut()
-    # materialization breathing with memory pressure"); below the
-    # threshold localCheckpoint skips the spill's write job (round-10
-    # sf0.1 A/B — see minhash_lsh_pairs). Referenced by the band stage
-    # and both refine joins; no spark_partition_id consumer.
+    # ARRAYS are exactly the deserialized-row-block shape the spill
+    # exists for (this frame was SCALING.md's remaining q42p suspect —
+    # "the sf10 shingle-array cut() materialization breathing with
+    # memory pressure"). Referenced by the band stage and both refine
+    # joins; no spark_partition_id consumer.
     sh_df = cut(
         spread(df)
         .select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
         .select("id", shingles(F.col("toks"), shingle_n).alias("sh")),
         reliable,
-        via_parquet=spill_worthwhile(df),
+        via_parquet=_spill(df),
     )
     # materialize=False: the candidate set feeds exactly one consumer
     # chain (the refine), so the band self-join can land in the final
@@ -423,10 +420,17 @@ def minhash_neardup_pairs(
     )
 
 
+def _check_simhash_bits(n_bits: int) -> None:
+    # one mask bit per md5 hex digit: 32 digits, so at most 32 bits
+    if not 1 <= n_bits <= 32:
+        raise ValueError(f"SimHash n_bits must be in [1, 32], got {n_bits}")
+
+
 def simhash_signatures(
     df: DataFrame, id_col: str, text_col: str, n_bits: int = 32
 ) -> DataFrame:
-    """(id, simhash) — bit-string signature per document.
+    """(id, simhash) — bit-string signature per document, one bit per
+    md5 hex digit: ``n_bits`` must be in [1, 32] (ValueError otherwise).
 
     Tokens AND their md5s are staged in their own projections; the 32
     per-bit aggregates then reference the hash array attribute instead
@@ -454,14 +458,11 @@ def simhash_signatures(
     (scripts/ab_simhash_signature.py: inline 6.0 s / staged 1.65 s /
     r9 substring-compare 1.95 s medians at sf0.1, identical outputs).
     """
+    _check_simhash_bits(n_bits)
     toks_df = spread(df).select(
         F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
     )
     hashed = toks_df.select("id", token_hashes(F.col("toks")).alias("th"))
-    if n_bits > 32:  # legacy wide-signature path (no md5 digits left)
-        return hashed.select(
-            "id", simhash_bits_from_hashes(F.col("th"), n_bits).alias("simhash")
-        )
     staged = hashed.select(
         "id",
         F.size(F.col("th")).alias("__n"),
@@ -510,7 +511,7 @@ def simhash_neardup_pairs(
     cap touched; unskewed buckets are unaffected). Same trade as the
     salted skew join in ``operators.skew``.
     """
-
+    _check_simhash_bits(n_bits)
     if max_hamming >= n_bands:
         import warnings
 
@@ -522,28 +523,19 @@ def simhash_neardup_pairs(
             stacklevel=2,
         )
     band_w = n_bits // n_bands
-    # sim0..simK: the '0'/'1' signature parsed ONCE per row into 48-bit
-    # integer chunks (48 < 63 so conv->long never overflows), so the
-    # refine below is one bit_count(a XOR b) per chunk per candidate
-    # pair instead of 2 x n_bits interpreted substring compares (the
-    # BHJ evaluates the hamming expression in the join condition AND
-    # the projection). Same integer by construction: differing chars ==
-    # differing bits. Bands also shuffle/broadcast 8-byte longs instead
-    # of the n_bits-char string (guide: narrower types through the
-    # exchange).
-    chunk_w = 48
-    n_chunks = (n_bits + chunk_w - 1) // chunk_w
-    sim_cols = [f"sim{k}" for k in range(n_chunks)]
+    # sim: the '0'/'1' signature parsed ONCE per row into a long
+    # (n_bits <= 32, so conv->long never overflows), so the refine below
+    # is one bit_count(a XOR b) per candidate pair instead of 2 x n_bits
+    # interpreted substring compares (the BHJ evaluates the hamming
+    # expression in the join condition AND the projection). Same integer
+    # by construction: differing chars == differing bits. Bands also
+    # shuffle/broadcast an 8-byte long instead of the n_bits-char string
+    # (guide: narrower types through the exchange).
     sigs = simhash_signatures(df, id_col, text_col, n_bits)
-    for k, c in enumerate(sim_cols):
-        piece = F.substring(
-            "simhash", k * chunk_w + 1, min(chunk_w, n_bits - k * chunk_w)
-        )
-        sigs = sigs.withColumn(c, F.conv(piece, 2, 10).cast("long"))
-    sigs = cut(sigs)
+    sigs = cut(sigs.withColumn("sim", F.conv("simhash", 2, 10).cast("long")))
     bands = sigs.select(
         "id",
-        *sim_cols,
+        "sim",
         F.explode(
             F.array(
                 *[
@@ -557,7 +549,7 @@ def simhash_neardup_pairs(
                 ]
             )
         ).alias("b"),
-    ).select("id", *sim_cols, F.col("b.band_idx"), F.col("b.band_bits"))
+    ).select("id", "sim", F.col("b.band_idx"), F.col("b.band_bits"))
     if bucket_cap is not None:
         # Bucket sizes via groupBy, NOT a window: a window partitioned
         # by the band value inherits the very skew being mitigated (the
@@ -586,10 +578,7 @@ def simhash_neardup_pairs(
     else:
         bands = bands.withColumn("sub", F.lit(0))
     a, b = bands.alias("a"), bands.alias("b")
-    hamming = sum(
-        F.bit_count(F.col(f"a.{c}").bitwiseXOR(F.col(f"b.{c}")))
-        for c in sim_cols
-    ).cast("int")
+    hamming = F.bit_count(F.col("a.sim").bitwiseXOR(F.col("b.sim"))).cast("int")
     return (
         a.join(
             b,

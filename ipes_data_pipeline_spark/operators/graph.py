@@ -43,7 +43,8 @@ oracle to pre-aggregate too — callers that want it should aggregate
 their own edge tables, as q140 does.
 
 ACCEPTED round 5: sparse contrib-carry (see the loop comment below) —
-2.96 s → 2.42 s median at sf0.1 (scripts/bench_pagerank_variants.py),
+2.96 s → 2.42 s median at sf0.1 (round-5 harness; the shipped loop is
+timed by scripts/ab_pagerank_ewcut.py),
 value-identical checksums, removes iterations-1 |nodes| left joins
 from the unrolled plan.
 

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ipes_data_pipeline_spark.functions.vectors import cosine, dot, norm, sign_bucket
+from ipes_data_pipeline_spark.operators import regime
 from ipes_data_pipeline_spark.operators.util import cut
 
 
@@ -665,78 +666,10 @@ def cosine_pairs_bucketed(
     )
 
 
-def kmeans_lloyd_centroids(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_cells: int = 8,
-    n_iter: int = 3,
-) -> DataFrame:
-    """DETERMINISTIC DataFrame-native Lloyd k-means: (c_id, c_vec) after
-    ``n_iter`` assign+update rounds.
-
-    Every source of nondeterminism in library k-means is pinned so the
-    result is bit-stable in ANY engine (this is what lets q72 carry a
-    cross-engine value oracle, which `pyspark.ml`'s sampled init cannot):
-
-    - init = the ``n_cells`` smallest ids' vectors (content-fixed, no
-      sampling); centroid labels stay those seed ids across rounds;
-    - assignment = argmin squared-L2 with ties broken on ascending
-      centroid id; the fold over dimensions is sequential in double
-      (zip_with + aggregate), bit-identical to DuckDB's list_reduce
-      (the q91 pattern);
-    - update = element-wise mean via DECIMAL(18,6) sums — exact
-      arithmetic, so summation ORDER cannot change the centroid (the
-      repo-wide dsum rule applied per dimension);
-    - empty cells simply drop their centroid row (identically in both
-      engines — the group is absent).
-
-    Physical shape per round: centroids are a tiny broadcast (cells ×
-    dim), so assignment is a map-side nested loop over the fact table
-    (no shuffle of the vectors); the update shuffles |cells| rows of
-    per-dimension partial sums — bounded by cells × dim, not by |rows|.
-    Centroids live driver-side between rounds, so the plan never nests:
-    every round's lineage is scan → assign → one aggregate (see
-    :func:`_lloyd_centroid_list`).
-    """
-    emb = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    cent = _lloyd_centroid_list(emb, n_cells, n_iter)
-    return df.sparkSession.createDataFrame(
-        cent, "c_id long, c_vec array<double>"
-    )
-
-
-#: Driver-regime training cap: the Lloyd/PQ training set is collected
-#: to the driver when its estimated bytes (rows × dim × 8) fit under
-#: this bound. Conf-tunable per deployment (round 11 — VERDICT item 8):
-#: a cluster with a fat driver can raise it, and forcing it to 0 pins
-#: every trainer to the distributed regime (the 100 TB path; pytest
-#: asserts both regimes produce identical centroid lists).
-PQ_DRIVER_TRAIN_MAX_BYTES_CONF = "spark.ipes.pqDriverTrainMaxBytes"
-_PQ_DRIVER_TRAIN_MAX_BYTES = 1 << 28
-
-
-def _driver_train_cap(spark) -> int:
-    """Resolve the driver-regime training cap from the session conf
-    (invalid values fall back to the 256 MiB default; 0 or negative is
-    VALID and means 'always distributed')."""
-    try:
-        return int(
-            spark.conf.get(
-                PQ_DRIVER_TRAIN_MAX_BYTES_CONF, str(_PQ_DRIVER_TRAIN_MAX_BYTES)
-            )
-        )
-    except ValueError:  # pragma: no cover - malformed user conf
-        return _PQ_DRIVER_TRAIN_MAX_BYTES
-
-
 def _lloyd_centroid_list(
     emb: DataFrame,
     n_cells: int,
     n_iter: int,
-    max_train_bytes: int | None = None,
     train_limit: int | None = None,
 ) -> list[tuple[int, list[float]]]:
     """The Lloyd loop itself: ``emb(id, v: array<double>)`` → sorted
@@ -756,12 +689,10 @@ def _lloyd_centroid_list(
     Two regimes, identical arithmetic (a pytest asserts they produce
     the same list on the fixture corpus):
 
-    - **Driver regime** (training set ≤ ``max_train_bytes`` — defaults
-      to the :data:`PQ_DRIVER_TRAIN_MAX_BYTES_CONF` session conf,
-      256 MiB — estimated rows × dim × 8 by one stats job): collect the
-      (id, v) projection
-      once and run every round in numpy. This is how production ANN
-      indexes train centroids anyway (a bounded corpus/sample, not the
+    - **Driver regime** (training set under the ``driver_train`` cap of
+      :mod:`.regime` — rows × dim × 8, counted by one stats job):
+      collect the (id, v) projection once and run every round in numpy.
+      This is how production ANN indexes train centroids anyway (a bounded corpus/sample, not the
       full 100 TB), and it removes the per-round distributed-job
       barrier that dominated q72/q130 at bench scale — an iterative
       algorithm over 8 × 64 doubles has no business paying a Spark job
@@ -786,8 +717,6 @@ def _lloyd_centroid_list(
     Sharing the list (not a DataFrame) lets callers like
     :func:`semdedup` skip a createDataFrame→collect round-trip.
     """
-    if max_train_bytes is None:
-        max_train_bytes = _driver_train_cap(emb.sparkSession)
     if train_limit is not None:
         emb = emb.orderBy("id").limit(train_limit)
     stats = emb.agg(
@@ -797,7 +726,7 @@ def _lloyd_centroid_list(
     n_rows, dim = stats["n"], stats["dim"] or 0
     if n_rows == 0:
         return []
-    if n_rows * max(dim, 1) * 8 <= max_train_bytes:
+    if regime.small("driver_train", n_rows * max(dim, 1) * 8):
         return _lloyd_driver(emb, n_cells, n_iter)
     # distributed regime: the caller's lineage is referenced by the
     # seed collect and every round — cut it once or a derived frame
@@ -1059,11 +988,11 @@ def ann_topk_ivf_kmeans_lloyd(
     n_iter: int = 3,
     k: int = 10,
 ) -> DataFrame:
-    """IVF ANN over :func:`kmeans_lloyd_centroids` cells — the
-    deterministic sibling of :func:`ann_topk_ivf_kmeans`, value-
-    checkable cross-engine (q72). Same scale shape: assignment is an
-    equi-join on the cell id, the probe touches one cell, no cross
-    join of the corpus."""
+    """IVF ANN over deterministic Lloyd k-means cells
+    (:func:`_lloyd_centroid_list`), value-checkable cross-engine (q72).
+    Same scale shape as :func:`ann_topk_ivf`: assignment is an equi-join
+    on the cell id, the probe touches one cell, no cross join of the
+    corpus."""
     emb = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
@@ -1112,8 +1041,8 @@ def semdedup(
     IS NULL``. The drop rule is a single anti-join pass (no iteration):
     deterministic, order-free, and exactly expressible in SQL — which
     is what lets the operator carry a cross-engine value oracle (q130)
-    on top of the :func:`kmeans_lloyd_centroids` cells q72 already
-    value-checks.
+    on top of the Lloyd cells (:func:`_lloyd_centroid_list`) q72
+    already value-checks.
 
     Scale shape: clustering is the Lloyd loop (driver regime under the
     training cap, broadcast-assign + (cell × dim)-bounded update
@@ -1195,97 +1124,6 @@ def semdedup(
         _with_cells(emb, rows)
         .groupBy("c_id")
         .applyInPandas(prune, "id long, c_id long, dominator long, keep boolean")
-    )
-
-
-def ann_topk_ivf_kmeans(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    n_cells: int = 8,
-    k: int = 10,
-    n_probe: int = 1,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF ANN with *learned* cells: k-means centroids partition the
-    vector space; search probes the ``n_probe`` cells nearest each
-    query vector (cells ranked by squared-L2 centroid distance — true
-    multi-probe, the FAISS ``nprobe`` semantics; the candidate set is
-    monotone in ``n_probe``, so recall can only improve).
-
-    The scale shape is identical to :func:`ann_topk_ivf` (equi-join on a
-    cell id — no cross join); the cells are simply better balanced than
-    coordinate sign planes, and each probed cell adds one joined
-    partition of candidates. Training cost is one pass over a sample;
-    assignment is a per-row argmin over ``n_cells`` centroids (JVM-side
-    via the fitted model's transform). `pyspark.ml` k-means depends on
-    init sampling, so THIS form has no cross-engine value oracle — the
-    declared query (q72) uses the deterministic
-    :func:`ann_topk_ivf_kmeans_lloyd` sibling instead; this one stays
-    as the library-integration variant (the exactness baseline remains
-    :func:`ann_topk_bruteforce`).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    model = KMeans(k=n_cells, seed=seed, maxIter=10).fit(feat.select("features"))
-    assigned = model.transform(feat).select(
-        "id", "v", F.col("prediction").alias("cell")
-    )
-    # rank ALL cells by centroid distance per query and explode the
-    # n_probe nearest: the centroid table ships as one broadcast row
-    # (the _with_cells pattern), the ranking is an array_sort over
-    # n_cells structs per query row — no driver round-trip per query
-    cent = [
-        (int(i), [float(x) for x in c])
-        for i, c in enumerate(model.clusterCenters())
-    ]
-    spark = df.sparkSession
-    cent_row = spark.createDataFrame(
-        [(cent,)], "cents array<struct<c_id:long,c_vec:array<double>>>"
-    )
-
-    def d2(v, cv):
-        diff2 = F.zip_with(v, cv, lambda x, y: (x - y) * (x - y))
-        return F.aggregate(diff2, F.lit(0.0), lambda acc, x: acc + x)
-
-    ranked = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("cents"),
-                lambda c: F.struct(
-                    d2(F.col("q_arr"), c["c_vec"]).alias("d2"),
-                    c["c_id"].alias("c_id"),
-                ),
-            )
-        ),
-        1,
-        n_probe,
-    )
-    q_probe = (
-        query_df.select(
-            F.col(vec_col).alias("q_vec"),
-            F.col(vec_col).cast("array<double>").alias("q_arr"),
-        )
-        .crossJoin(F.broadcast(cent_row))
-        .select(
-            "q_vec",
-            F.explode(F.transform(ranked, lambda s: s["c_id"])).alias("q_cell"),
-        )
-    )
-    return (
-        assigned.join(F.broadcast(q_probe), assigned.cell == F.col("q_cell"))
-        .select(F.col("id"), cosine(F.col("v"), F.col("q_vec")).alias("cos_sim"))
-        # no per-id dedup needed: cells partition the corpus, so a
-        # corpus row matches at most one of a query's probed cells
-        .orderBy(F.desc("cos_sim"), F.asc("id"))
-        .limit(k)
     )
 
 
@@ -1625,20 +1463,12 @@ def pq_topk(
 
 
 def _pq_fused_fits(n_train: int, m: int, dsub: int) -> bool:
-    """True when the whole PQ training set fits the driver-regime byte
-    cap (rows × dim × 8 ≤ :data:`PQ_DRIVER_TRAIN_MAX_BYTES_CONF`,
-    default 256 MiB) — the bound that turns on the fused one-collect
-    training AND the fused one-scan Arrow encode. Forcing the conf to 0
-    pins the PQ family to the distributed per-subspace path."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    cap = (
-        _driver_train_cap(spark)
-        if spark is not None
-        else _PQ_DRIVER_TRAIN_MAX_BYTES
-    )
-    return 0 < n_train * m * dsub * 8 <= cap
+    """True when the whole PQ training set (rows × dim × 8) is non-empty
+    and under the ``driver_train`` cap of :mod:`.regime` — the bound
+    that turns on the fused one-collect training AND the fused one-scan
+    Arrow encode; otherwise the distributed per-subspace path."""
+    nbytes = n_train * m * dsub * 8
+    return nbytes > 0 and regime.small("driver_train", nbytes)
 
 
 def _probe_cells(qv: list[float], coarse: list, n_probe: int) -> list[int]:

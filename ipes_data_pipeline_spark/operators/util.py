@@ -9,6 +9,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ipes_data_pipeline_spark.operators import regime
+
 #: parquet-spill scratch dirs created by cut(via_parquet=True) in this
 #: process. Freed at interpreter exit, or earlier via release_spills()
 #: — a spill must outlive every action on the returned frame, so the
@@ -82,65 +84,16 @@ def _spill_root(spark: SparkSession) -> str | None:
     return None
 
 
-#: Input-size threshold (bytes) below which an INPUT-PROPORTIONAL
-#: intermediate (minhash band/shingle tables) is materialized via
-#: localCheckpoint instead of the parquet spill. The spill is the right
-#: store when the frame is big — the round-9 sf10 A/B measured
-#: localCheckpoint's deserialized row blocks at +182 s vs +26 s for the
-#: spill on the 213M-row set — but it costs an extra write job + FS
-#: round-trip that localCheckpoint doesn't, ~0.4 s per query at sf0.1
-#: (round-10 A/B, this file's history). The regime must therefore be
-#: scale-ADAPTIVE, not a constant: Catalyst's optimized-plan size
-#: estimate of the operator's INPUT (file-size-based for scan-rooted
-#: plans, no action needed) picks the store. 256 MiB ~ the sf1/sf10
-#: boundary for the documents corpus. NOT used for edge sets
-#: (candidate_pairs): those grow with block-pair counts, not input
-#: bytes, and stay on the spill unconditionally.
-SPILL_MIN_INPUT_BYTES_CONF = "spark.ipes.spillMinInputBytes"
-_SPILL_MIN_INPUT_BYTES = 256 << 20
-
-#: Lower threshold for PAIR-PROPORTIONAL intermediates (fuzzy-dedup
-#: edge sets): edges grow with in-block pair counts, ~1-2 orders of
-#: magnitude past the input (4.3M edges from 15k rows at sf0.1, 213M at
-#: sf10), so the store regime must flip to the columnar spill well
-#: before the input itself is spill-sized. 8 MiB of input ~ the sf2
-#: customer table; sf10's measured +182 s localCheckpoint heap-thrash
-#: regime (round-9 A/B) sits far above it, sf0.1/sf1 (where the spill's
-#: extra write job is pure overhead, ~0.4 s/query) below.
-EDGE_SPILL_MIN_INPUT_BYTES_CONF = "spark.ipes.edgeSpillMinInputBytes"
-_EDGE_SPILL_MIN_INPUT_BYTES = 8 << 20
-
-
-def spill_worthwhile(
-    df: DataFrame,
-    conf_key: str = SPILL_MIN_INPUT_BYTES_CONF,
-    default_bytes: int = _SPILL_MIN_INPUT_BYTES,
-) -> bool:
-    """True when ``df``'s Catalyst size estimate crosses the spill
-    threshold — callers materializing an intermediate PROPORTIONAL to
-    ``df`` pass the result as ``cut(..., via_parquet=...)``. Callers
-    whose intermediate grows FASTER than the input (edge sets) pass the
-    pair-proportional conf/default pair instead."""
-    thr = int(df.sparkSession.conf.get(conf_key, str(default_bytes)))
-    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    return est >= thr
-
-
 def pin_pairs(src_df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Materialize a PAIR-PROPORTIONAL frame (LSH candidate pairs / edge
     sets) before iterative consumption — the q133/_cluster_docs lesson:
     a propagation loop references its edge set once per round, and an
     un-materialized band self-join + distinct would re-execute every
-    round. Store regime follows the pair-proportional edge threshold
-    keyed on the SOURCE corpus size (``src_df``), because pair counts
-    grow 1–2 orders of magnitude faster than the input (see
-    :data:`EDGE_SPILL_MIN_INPUT_BYTES_CONF`)."""
-    return cut(
-        pairs,
-        via_parquet=spill_worthwhile(
-            src_df, EDGE_SPILL_MIN_INPUT_BYTES_CONF, _EDGE_SPILL_MIN_INPUT_BYTES
-        ),
-    )
+    round. Store regime follows the ``edge_spill`` cap keyed on the
+    SOURCE corpus size (``src_df``), because pair counts grow 1–2 orders
+    of magnitude faster than the input (see :mod:`.regime`)."""
+    spill = not regime.small("edge_spill", regime.estimate(src_df))
+    return cut(pairs, via_parquet=spill)
 
 
 def cut(

@@ -21,6 +21,7 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -142,10 +143,13 @@ def run_pipeline(
         if skip_gold:
             # reuse a previously-materialized gold if one exists (the
             # same contract as skip_bronze reusing bronze); a fresh lake
-            # simply has no gold yet — not an error
+            # simply has no gold yet — not an error. Any other read
+            # failure (corrupt or non-Parquet gold) propagates.
             try:
                 gold = spark.read.parquet(paths["gold"])
-            except Exception:
+            except AnalysisException as e:
+                if e.getCondition() != "PATH_NOT_FOUND":
+                    raise
                 gold = None
         else:
             gold = spark.read.parquet(paths["gold"])

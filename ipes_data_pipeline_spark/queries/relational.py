@@ -1046,7 +1046,7 @@ def q104(spark, sf):
     # driver collect at 100 TB):
     #
     # - Small build side (Catalyst estimate of the filtered dim scan
-    #   under spark.ipes.bloomKeyCollectMaxBytes, default 8 MiB): ONE
+    #   under the ``bloom_keys`` cap of operators/regime.py): ONE
     #   driver round-trip collects the distinct keys and derives the
     #   2048-word mask table in Python md5 (bit-identical digests over
     #   the same decimal strings); the exact leg joins the bounded key
@@ -1060,17 +1060,15 @@ def q104(spark, sf):
     #   dim FRAME. The driver never holds the key set.
     import hashlib
 
-    from ipes_data_pipeline_spark.operators.util import cut, spill_worthwhile
+    from ipes_data_pipeline_spark.operators import regime
+    from ipes_data_pipeline_spark.operators.util import cut
 
     dim_scan = (
         t(spark, sf, "customer")
         .where(F.col("c_mktsegment") == "BUILDING")
         .select(F.col("c_custkey").cast("string").alias("v"))
     )
-    collect_ok = not spill_worthwhile(
-        dim_scan, "spark.ipes.bloomKeyCollectMaxBytes", 8 << 20
-    )
-    if collect_ok:
+    if regime.small("bloom_keys", regime.estimate(dim_scan)):
         keys = sorted(int(r["v"]) for r in dim_scan.distinct().collect())
         masks: dict[int, int] = {}
         for key in keys:

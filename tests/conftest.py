@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -22,3 +23,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def distributed_regimes(monkeypatch):
+    """Context manager forcing every size-gated site of
+    ``operators.regime`` into its distributed / spill regime (all caps
+    0). Every regime decision is made on the driver, so patching the cap
+    table in-process reaches all of them."""
+    from ipes_data_pipeline_spark.operators import regime
+
+    @contextlib.contextmanager
+    def forced():
+        with monkeypatch.context() as m:
+            for site in regime.CAPS:
+                m.setitem(regime.CAPS, site, 0)
+            yield
+
+    return forced

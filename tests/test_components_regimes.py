@@ -2,7 +2,7 @@
 
 ``min_label_components_contracted`` solves the contracted graph either
 by a driver union-find (small graphs, the default) or by distributed
-min-label propagation to fixpoint (beyond ``driver_components_max_rows``).
+min-label propagation to fixpoint (forced by ``distributed_regimes``).
 A chain graph of diameter 7 leaves a NON-empty contraction (l1 is not
 yet the component minimum), so both regimes actually run their solver.
 """
@@ -30,14 +30,13 @@ def _chain_graph(spark, n=8, offset=0):
     return nodes, edges
 
 
-def test_driver_uf_matches_distributed_fixpoint(spark):
+def test_driver_uf_matches_distributed_fixpoint(spark, distributed_regimes):
     nodes, edges = _chain_graph(spark)
     uf = min_label_components_contracted(nodes, edges)  # driver regime
-    loop = min_label_components_contracted(
-        nodes, edges, driver_components_max_rows=0  # force distributed
-    )
     got_uf = {(r["node"], r["canonical_id"]) for r in uf.collect()}
-    got_loop = {(r["node"], r["canonical_id"]) for r in loop.collect()}
+    with distributed_regimes():
+        loop = min_label_components_contracted(nodes, edges)
+        got_loop = {(r["node"], r["canonical_id"]) for r in loop.collect()}
     expect = {(i, 1) for i in range(1, 9)} | {(100, 100), (200, 200)}
     assert got_uf == expect
     assert got_loop == expect

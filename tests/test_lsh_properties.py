@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ipes_data_pipeline_spark.operators.dedup_minhash import (
     minhash_lsh_pairs,
+    simhash_neardup_pairs,
     simhash_signatures,
 )
 
@@ -199,6 +200,15 @@ def test_delta_dedup_matches_full_pairing_and_reuses_stored_bands(spark, docs):
         ).collect()
     }
     assert got2 == expect
+
+
+@pytest.mark.parametrize("n_bits", [0, 33, 64])
+def test_simhash_rejects_bits_beyond_md5_digits(docs, n_bits):
+    # one signature bit per md5 hex digit: only 1..32 bits exist
+    with pytest.raises(ValueError, match="n_bits"):
+        simhash_signatures(docs, "doc_id", "text", n_bits)
+    with pytest.raises(ValueError, match="n_bits"):
+        simhash_neardup_pairs(docs, "doc_id", "text", n_bits=n_bits)
 
 
 def test_simhash_banding_is_lossless_at_radius(spark):
@@ -473,7 +483,7 @@ def test_semdedup_within_cluster_prune(spark):
     assert out[3][1] and out[4][1] and out[5][1]
 
 
-def test_lloyd_driver_and_distributed_regimes_agree(spark):
+def test_lloyd_driver_and_distributed_regimes_agree(spark, distributed_regimes):
     """_lloyd_centroid_list has two physical regimes (driver numpy under
     the training cap, distributed rounds above it) that must be
     BIT-IDENTICAL — the q72/q130 oracles only check whichever regime
@@ -491,33 +501,29 @@ def test_lloyd_driver_and_distributed_regimes_agree(spark):
         )
     )
     driver = _lloyd_centroid_list(emb, n_cells=8, n_iter=3)
-    dist = _lloyd_centroid_list(
-        emb, n_cells=8, n_iter=3, max_train_bytes=0  # force distributed
-    )
+    with distributed_regimes():
+        dist = _lloyd_centroid_list(emb, n_cells=8, n_iter=3)
     assert [c for c, _ in driver] == [c for c, _ in dist]
     for (_, dv), (_, xv) in zip(driver, dist):
         assert dv == xv  # exact float equality, not approx
 
 
-def test_pq_driver_train_cap_conf_pins_regimes_equal(spark):
-    """spark.ipes.pqDriverTrainMaxBytes=0 forces the whole PQ family to
-    the distributed per-subspace path (round 11 — the 100 TB regime,
-    previously only reachable by growing the corpus past the hard-coded
-    256 MiB cap). The forced regime must produce the exact rows of the
-    default fused-driver regime."""
+def test_pq_driver_train_cap_conf_pins_regimes_equal(spark, distributed_regimes):
+    """A 0 ``driver_train`` cap forces the whole PQ family to the
+    distributed per-subspace path (the 100 TB regime, otherwise only
+    reachable by growing the corpus past the 256 MiB cap). The forced
+    regime must produce the exact rows of the default fused-driver
+    regime."""
     from ipes_data_pipeline_spark.queries import REGISTRY, load_all
 
     load_all()
     sf_dir = "/root/testdata/sf0.001"
     name = "q159_pq_ann"
     fused = sorted(map(tuple, REGISTRY[name].spark(spark, sf_dir).collect()))
-    spark.conf.set("spark.ipes.pqDriverTrainMaxBytes", "0")
-    try:
+    with distributed_regimes():
         dist = sorted(
             map(tuple, REGISTRY[name].spark(spark, sf_dir).collect())
         )
-    finally:
-        spark.conf.unset("spark.ipes.pqDriverTrainMaxBytes")
     assert fused == dist
 
 
@@ -557,46 +563,6 @@ def test_pq_fused_training_collect_matches_per_subspace(spark):
         assert [c for c, _ in fused] == [c for c, _ in per_sub]
         for (_, fv), (_, pv) in zip(fused, per_sub):
             assert fv == pv  # exact float equality per element
-
-
-def test_ivf_kmeans_multi_probe_improves_recall(spark):
-    """ann_topk_ivf_kmeans(n_probe=p): probing the p nearest cells sees
-    a candidate superset of p-1 probes, so recall against the brute
-    -force top-k is monotone — and n_probe = n_cells IS brute force.
-    (Regression for the round-3 finding: limit(n_probe) used to drop
-    QUERY rows instead of ranking cells.)"""
-    from pyspark.sql import functions as F
-
-    from ipes_data_pipeline_spark.operators.similarity import (
-        ann_topk_bruteforce,
-        ann_topk_ivf_kmeans,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") == 7)
-    exact = {
-        r["id"]
-        for r in ann_topk_bruteforce(emb, "vec_id", "embedding", q, k=10).collect()
-    }
-    recalls = []
-    for p in (1, 2, 4):
-        got = {
-            r["id"]
-            for r in ann_topk_ivf_kmeans(
-                emb, "vec_id", "embedding", q, n_cells=4, k=10, n_probe=p
-            ).collect()
-        }
-        recalls.append(len(exact & got) / len(exact))
-    assert recalls == sorted(recalls), recalls  # monotone in n_probe
-    # probing every cell IS brute force
-    full = {
-        r["id"]
-        for r in ann_topk_ivf_kmeans(
-            emb, "vec_id", "embedding", q, n_cells=4, k=10, n_probe=4
-        ).collect()
-    }
-    assert full == exact
-    assert recalls[-1] == 1.0
 
 
 def test_minhash_empty_shingle_docs_band_on_null_components(spark):

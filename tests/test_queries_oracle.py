@@ -8,7 +8,8 @@ from __future__ import annotations
 
 import pytest
 
-from ipes_data_pipeline_spark.oracle import check_query
+from ipes_data_pipeline_spark.operators import regime
+from ipes_data_pipeline_spark.oracle import check_query, compare, run_oracle
 from ipes_data_pipeline_spark.queries import REGISTRY, load_all
 
 load_all()
@@ -18,6 +19,33 @@ load_all()
 def test_query_matches_oracle(spark, sf_dir, name):
     problems = check_query(spark, name, sf_dir)
     assert not problems, f"{name}: {problems}"
+
+
+@pytest.mark.parametrize("name", sorted(REGISTRY))
+def test_query_matches_oracle_in_distributed_regimes(
+    spark, sf_dir, monkeypatch, distributed_regimes, name
+):
+    """Every size-gated site forced to its distributed / spill regime
+    (all caps 0) still gives the oracle's answer. Queries that consult
+    no site are skipped once built."""
+    sites = []
+    small = regime.small
+
+    def spy(site, nbytes):
+        sites.append(site)
+        return small(site, nbytes)
+
+    monkeypatch.setattr(regime, "small", spy)
+    spec = REGISTRY[name]
+    with distributed_regimes():
+        df = spec.spark(spark, sf_dir)
+        if not sites:
+            pytest.skip("no size-gated site consulted")
+        got = df.toPandas()
+    problems = [] if spec.oracle is None else compare(
+        got, run_oracle(spec.oracle, sf_dir)
+    )
+    assert not problems, f"{name} {sorted(set(sites))}: {problems}"
 
 
 def test_bucketed_range_join_with_equi_keys(spark):

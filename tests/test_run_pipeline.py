@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from ipes_data_pipeline_spark.pipeline.run import run_pipeline
 from ipes_data_pipeline_spark.sources.metrics import latest_run, run_history
 from tests.fixtures import RAW_FILINGS
@@ -72,3 +74,23 @@ def test_skip_gold_on_fresh_lake_succeeds(spark, tmp_path):
         spark, str(raw_dir), out, skip_bronze=True, stats=False
     )
     assert res2.gold is not None and res2.gold.count() == res2.companies.count()
+
+
+def test_skip_gold_raises_on_unreadable_gold(spark, tmp_path):
+    """--skip-gold treats only a MISSING gold layer as "no gold yet"; a
+    gold path that exists but is not Parquet must fail the run."""
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    raw_dir = tmp_path / "raw"
+    raw_dir.mkdir()
+    with open(raw_dir / "filings.jsonl", "w") as f:
+        for rec in RAW_FILINGS:
+            f.write(json.dumps(rec) + "\n")
+    out = str(tmp_path / "lake")
+    os.makedirs(os.path.join(out, "gold"))
+    with open(os.path.join(out, "gold", "part-0.parquet"), "w") as f:
+        f.write("not parquet")
+    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+        run_pipeline(spark, str(raw_dir), out, skip_gold=True, stats=False)
